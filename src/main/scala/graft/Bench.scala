@@ -63,11 +63,11 @@ import org.apache.spark.sql.SparkSession
   * repeats (a real regression). A driver-side record can no longer
   * carry an unadjudicated env artifact like BENCH_r15's 24x flag.
   *
-  * Control arm + drift normalization (r17): the StressR16 interleaved
-  * control-arm protocol moved into the MAIN loop — never-flagged
-  * control queries timed at fixed stations through the run, each
-  * station's drift index (median control ratio vs baseline) on the
-  * run's own timeline. Flags AND sub-floor >2x queries adjudicate
+  * Control arm + drift normalization (r17): the r16 interleaved
+  * control-arm protocol (stress_r16_flags.json) moved into the MAIN
+  * loop — never-flagged control queries timed at fixed stations
+  * through the run, each station's drift index (median control ratio
+  * vs baseline) on the run's own timeline. Flags AND sub-floor >2x queries adjudicate
   * against their nearest station's drift; the run self-labels its
   * window mode (`absolute` vs `degraded-control-relative`); each new
   * record diffs per-FAMILY against the previous committed record
@@ -160,8 +160,7 @@ object Bench {
     * files): resolving them against the process CWD writes stray
     * files when a main is launched from anywhere else (r14 ADVICE).
     * SPARK_GRAFT_REPO_ROOT wins; else the nearest ancestor carrying
-    * build.sbt; else CWD (unchanged behavior for in-repo launches).
-    * Shared by Bench and the Stress* gate harnesses. */
+    * build.sbt; else CWD (unchanged behavior for in-repo launches). */
   private[graft] def repoRootPath: java.nio.file.Path =
     sys.env.get("SPARK_GRAFT_REPO_ROOT")
       .map(java.nio.file.Paths.get(_).toAbsolutePath)
@@ -215,12 +214,13 @@ object Bench {
 
   // -------------------------------------------------------------------
   // Control arm + window drift (r17, the r16 verdict's #2/#3/#6):
-  // StressR16 proved flags adjudicate cleanly against interleaved
-  // never-flagged controls (the flagged set moved WITH the controls,
-  // 1.98x vs 1.55x median inflation) — but the arm lived only in the
-  // one-off stress harness, so every degraded driver window still
-  // produced flags a judging round had to adjudicate by hand. The arm
-  // now lives in the MAIN loop:
+  // the r16 stress record (stress_r16_flags.json, SURVEY §6 r16) showed
+  // flags adjudicate cleanly against interleaved never-flagged
+  // controls (the flagged set moved WITH the controls, 1.98x vs 1.55x
+  // median inflation) — but the arm lived only in a one-off harness,
+  // so every degraded window in a full record still produced flags
+  // that had to be adjudicated by hand. The arm now lives in the MAIN
+  // loop:
   //   - CONTROLS: cheap, historically never-flagged queries with
   //     diverse plan shapes, timed once each at fixed STATIONS (bench
   //     start, every `canaryEvery` queries, bench end).
@@ -236,10 +236,15 @@ object Bench {
   //     numbers, not the raw ratios).
   // -------------------------------------------------------------------
 
+  /** Re-timed every `canaryEvery` queries; its series localises a
+    * degradation window on the run's own timeline. */
+  private[graft] val CanaryQuery = "q10_pricing_summary"
+
   /** The in-run control arm: never-flagged through r16, sub-second,
     * diverse shapes (agg scan / session window / ngram explode /
-    * event pivot). q132 was in StressR16's arm but carried an r16
-    * sub-floor qualifier — dropped. */
+    * event pivot). q132 was in the r16 stress arm
+    * (stress_r16_flags.json) but carried an r16 sub-floor qualifier —
+    * dropped. */
   private[graft] val ControlQueries = Seq(
     "q10_pricing_summary", "q20_sessionize", "q48_ngram_freq",
     "q121_transition_matrix")
@@ -485,7 +490,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
     // Inputs move to tmpfs BEFORE the session exists (see
     // [[setupRamdisk]]); Spark's shuffle scratch and the queries'
@@ -499,200 +503,12 @@ object Bench {
       System.setProperty("java.io.tmpdir", p.toString)
       p.toString
     }
-    val sparkBuilder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    val spark = scratchBase
-      .fold(sparkBuilder)(p => sparkBuilder.config("spark.local.dir", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      conf = scratchBase.map("spark.local.dir" -> _).toMap)
 
-    val headline = Seq(
-      "q10_pricing_summary", "q11_ship_priority", "q04_distinct_on",
-      "q08_fuzzy_match", "q14_rollup", "q16_percentiles",
-      "q20_sessionize", "q21_tumbling_agg", "q30_dedup_exact",
-      "q31_dedup_minhash", "q33_ngram_jaccard", "q34_embed_neardup",
-      "q35_ann_bruteforce", "q37_lang_id",
-      // the 22 registered-but-unbenched queries (r17 verdict #4:
-      // "every registered query has a perf record" is the gate's own
-      // contract) — sub-second ETL/analytics shapes, plus q78 whose
-      // registered buckets=1 oracle form is still worth a record even
-      // though StressR8 times the real bucketed path
-      "q01_name_parse", "q02_party_state_district", "q03_normalize",
-      "q05_election_candidates", "q06_incumbents_by_term",
-      "q07_reference_lists", "q09_unpivot_scores", "q12_topk_per_group",
-      "q13_json_extract", "q15_anti_join", "q17_moments",
-      "q18_moving_avg", "q32_dedup_simhash", "q36_ann_ivf",
-      "q38_quality_score", "q39_token_count", "q40_fingerprint",
-      "q42_fuzzy_jaro_winkler", "q44_roster_query", "q50_split_assign",
-      "q56_approx_stats", "q78_pack_greedy",
-      // LLM-pipeline + linkage paths (added r4 — invisible before)
-      "q41_embed_lsh", "q43_fuzzy_link_full", "q45_ann_ivf_pruned",
-      // corpus-curation + extraction paths (added r4)
-      "q46_css_extract", "q47_redact_pii", "q48_ngram_freq",
-      "q49_contamination",
-      // clustering + repetition + event joins (added r5)
-      "q52_repetition", "q53_dedup_survivors", "q54_asof_join",
-      "q55_range_join", "q60_curate",
-      // r5-r7 surfaces promoted to headline (added r8)
-      "q51_dedup_cluster", "q57_split_rows", "q58_name_full",
-      "q59_election_parse", "q61_ann_ivf_trained", "q62_fuzzy_link_1034",
-      // incremental dedup (added r8)
-      "q63_dedup_incr_exact", "q64_dedup_incremental", "q65_embed_incremental",
-      // PQ search, bloom dedup, corpus mixing, heavy hitters (added r8)
-      "q66_ann_ivfpq", "q67_dedup_incr_bloom", "q68_mix_sources",
-      "q69_heavy_hitters", "q70_simhash_incremental", "q71_bm25",
-      "q72_line_dedup", "q73_lm_quality",
-      // sequence packing via the two-level prefix scan (added r8)
-      "q74_pack_sequences", "q75_pack_emit",
-      // semantic dedup via k-means blocking (added r8)
-      "q76_semantic_dedup",
-      // corpus data-card profile + NFC + chunking (added r8).
-      // q78_pack_greedy is deliberately NOT headline: its registered
-      // form runs buckets=1 for the recursive-CTE oracle — a
-      // single-task shape; the real bucketed path is timed in StressR8
-      "q77_corpus_profile", "q79_unicode_normalize",
-      "q80_chunk_overlap", "q81_snapshot_diff",
-      // URL profile, stratified sampling, trained quality gate (late r8)
-      "q82_domain_profile", "q83_stratified_sample", "q84_quality_classifier",
-      // div-grid extraction, funnels/retention, span dedup (late r8)
-      "q85_div_table", "q86_funnel", "q87_span_dedup", "q88_retention",
-      "q89_pagerank",
-      // SCD2 history + hopping windows (late r8)
-      "q90_scd2_history", "q91_sliding_window",
-      // dim as-of enrichment, CDC apply, cube, shard shuffle (late r8)
-      "q92_dim_asof", "q93_cdc_apply", "q94_cube", "q95_shard_shuffle",
-      // global rank + skew profile (late r8)
-      "q96_global_rank", "q97_key_profile",
-      // token-budget selection + outlink graph (late r8)
-      "q98_token_budget", "q99_outlink_graph",
-      // entity resolution with golden records (late r8)
-      "q100_entity_resolution",
-      // equi-width histogram + incremental SCD2 merge (late r8)
-      "q101_histogram", "q102_scd2_apply",
-      // pivot, gap fill, mode, concurrency, tf-idf, string-agg,
-      // z-score outliers (r10 — the r9 orphans, now oracle-checked)
-      "q103_pivot", "q104_gap_fill", "q105_mode", "q106_concurrency",
-      "q107_tfidf", "q108_string_agg", "q109_zscore_outliers",
-      // weighted sampling + robust outliers (r10)
-      "q110_weighted_sample", "q111_mad_outliers",
-      // first-touch attribution, winsorization, stratified sampling,
-      // cumulative distinct users (r10)
-      "q112_first_touch", "q113_winsorize", "q114_sample_per_stratum",
-      "q115_cumulative_users", "q116_session_window",
-      "q117_budget_per_source", "q118_interval_overlap",
-      // skew-safe z-score (agg + broadcast-back — r11)
-      "q119_zscore_agg",
-      // main-content extraction / boilerplate removal (r11)
-      "q120_main_content",
-      // event transition matrix, rolling anomaly, normalized dedup,
-      // exact set-similarity join, per-source quality rank (r11)
-      "q121_transition_matrix", "q122_rolling_zscore",
-      "q123_dedup_normalized", "q124_set_similarity", "q125_quality_rank",
-      // BPE pair counts + sketch rollup + script detection + exact
-      // global median via bracket+rank (r11)
-      "q126_bpe_pairs", "q127_hll_rollup", "q128_script_detect",
-      "q129_exact_median", "q130_set_sim_probe",
-      // equi-depth histogram, per-nation OLS trend, oriented triangle
-      // count, PMI collocations (late r11)
-      "q131_equidepth_hist", "q132_sales_trend", "q133_triangles",
-      "q134_pmi_bigrams",
-      // anchor text, EWMA smoothing, padding waste, top postings
-      // (late r11)
-      "q135_anchor_text", "q136_ewma_spend", "q137_padding_waste",
-      "q138_top_postings",
-      // mergeable quantile-sketch rollup (late r11)
-      "q139_quantile_rollup",
-      // label centroids, Q5-shape local-supplier join, vocab coverage
-      "q140_label_centroids", "q141_local_supplier_volume",
-      "q142_vocab_coverage",
-      // one-pass expectations gate + bounded top-k aggregate +
-      // denormalized nested export
-      "q143_expectations", "q144_topk_agg", "q145_nested_export",
-      // cross-source quantile normalization + one-pass column profile
-      // + sampled triangle estimate
-      "q146_quantile_normalize", "q147_column_profile",
-      "q148_triangles_approx",
-      // content-defined chunking (rolling-hash boundaries) +
-      // label-propagation communities + chunk-grain diff
-      "q149_cdc_chunks", "q150_communities", "q151_chunk_diff",
-      "q152_chunk_dedup",
-      // asymmetric containment join (subset-duplicate detection)
-      "q153_containment",
-      // BPE tokenizer: frozen-merge encode + train-and-emit (r12)
-      "q154_bpe_encode", "q155_bpe_train",
-      // bigram Stupid-Backoff LM quality + exact tokenizer counts (r12)
-      "q156_lm_bigram", "q157_bpe_token_count",
-      // trigram Stupid-Backoff chain + WordPiece encode/train (late r12)
-      "q158_lm_trigram", "q159_wordpiece_encode", "q160_wordpiece_train",
-      // unigram-LM (SentencePiece-family) Viterbi encode/EM train
-      "q161_unigram_encode", "q162_unigram_train",
-      // DSIR importance-resampling weights (data selection)
-      "q163_dsir_weights",
-      // three-family tokenizer bake-off in one scan
-      "q164_tokenizer_compare",
-      // FAISS-recipe residual IVF-PQ (vec_sub_f native kernel)
-      "q165_ann_ivfpq_residual",
-      // Gumbel-top-k DSIR resample (log-space weighted draw)
-      "q166_dsir_resample",
-      // PCA whitening projection (frozen eigenbasis, scan-speed)
-      "q167_pca_whiten",
-      // Aho-Corasick blocklist screen + compression-ratio quality
-      "q168_blocklist", "q169_compress_ratio",
-      // wide quality-signals export: 12 signals in one scan
-      "q170_quality_signals",
-      // incremental media near-dedup vs a perceptual-hash index (r13)
-      "q171_media_dedup_incr",
-      // order-4 Stupid Backoff via the generalized chain (r13)
-      "q172_lm_4gram",
-      // order-3 DSIR features via the generalized generator (r13)
-      "q173_dsir_trigram",
-      // model-based lang-id: train + holdout apply w/ fallback (r14)
-      "q174_langid_model",
-      // q170's signals + the model lang columns, one scan (r14)
-      "q175_quality_signals_model",
-      // OPQ-guarded IVF-PQ on an anisotropic view (r14)
-      "q176_ann_opq",
-      // persisted OPQ index: build + save + load + search (r15)
-      "q177_ann_opq_saved",
-      // billtrack50 vote-index normalization (r15)
-      "q178_vote_index",
-      // byte-level BPE encode + train (r15)
-      "q179_bbpe_encode", "q180_bbpe_train",
-      // PDF text extraction round trip (r15)
-      "q181_pdf_text",
-      // four-family tokenizer bake-off incl. byte BPE (r15)
-      "q182_tokenizer_compare4",
-      // UniMax waterfilling budget allocation + applied sample (r15)
-      "q183_unimax_mix", "q184_unimax_sample",
-      // byte-BPE with GPT-2-ish pre-tokenizer classes (r15)
-      "q185_bbpe_pretok",
-      // temperature (α) sampling mix (late r15)
-      "q186_temperature_mix",
-      // WARC write→read round trip (late r15)
-      "q187_warc_roundtrip",
-      // isolated persisted-index SEARCH (build-once fixture, r16) —
-      // the production serving number q177's lifecycle total hides
-      "q188_ann_search_saved",
-      // SQ8 scalar quantization: brute + IVF-pruned + persisted (r17)
-      "q189_ann_sq8", "q190_ann_sq8_ivf", "q191_ann_sq8_saved",
-      // isolated persisted-SQ8 SEARCH (build-once fixture, r18) —
-      // the q188 serving-only gate carried to the SQ8 rung
-      "q192_ann_sq8_search_saved",
-      // hybrid lexical+dense retrieval via reciprocal rank fusion (r18)
-      "q193_hybrid_rrf",
-      // MMR diversification rerank over the dense top-20 (r18)
-      "q194_mmr_rerank",
-      // per-query BM25 postings search + the weighted hybrid (r18)
-      "q195_bm25_search", "q196_hybrid_bm25"
-    ).filter(SparkEntry.queries.contains)
-      // dev-only subset filter for local iteration; the driver sets
-      // neither env var, so its protocol is unchanged
+    // every registered query, in query-number order; the subset
+    // filter is for local iteration only, a full run leaves it unset
+    val headline = SparkEntry.queryNames
       .filter(n => sys.env.get("SPARK_GRAFT_BENCH_ONLY")
         .forall(_.split(",").contains(n)))
 
@@ -766,10 +582,9 @@ object Bench {
           Left(s"${e.getClass.getSimpleName}: $firstLine")
       }
 
-    // Canary: the first headline query re-timed (one pass, same
-    // clear-cache conditions) every `canaryEvery` queries — its series
-    // puts any degradation window on the run's own timeline.
-    val canaryName = headline.headOption.getOrElse("")
+    // Canary: [[CanaryQuery]] re-timed (one pass, same clear-cache
+    // conditions) every `canaryEvery` queries — its series puts any
+    // degradation window on the run's own timeline.
     val canaryEvery = 20
     val canary = scala.collection.mutable.ListBuffer.empty[(Double, Pass)]
 
@@ -822,8 +637,8 @@ object Bench {
       // what its passes share.
       spark.catalog.clearCache()
       if ((qi + 1) % canaryEvery == 0) {
-        if (name != canaryName)
-          SparkEntry.queries.get(canaryName).foreach { cfn =>
+        if (name != CanaryQuery)
+          SparkEntry.queries.get(CanaryQuery).foreach { cfn =>
             val coff = sinceStart()
             timed(cfn).foreach(p => canary += ((coff, p)))
             spark.catalog.clearCache()
@@ -1194,7 +1009,7 @@ object Bench {
         s""""ramdisk":$ramdiskJson,""" +
         s""""spread_min_max_passes":$spread,""" +
         s""""passes_sec_gcms_allocmb":$passes,"t0_sec":$offs,""" +
-        s""""canary":{"name":${jsonStr(canaryName)},"every":$canaryEvery,""" +
+        s""""canary":{"name":${jsonStr(CanaryQuery)},"every":$canaryEvery,""" +
         s""""samples_t0_sec_gcms_allocmb":$canaryDetail},""" +
         s""""prewarm":$prewarmJson,"iters":$iters,""" +
         s""""window_mode":${jsonStr(windowMode)},""" +

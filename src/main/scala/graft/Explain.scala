@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan for each (or one
   * named) query so pushdown/broadcast/shuffle structure can be reviewed.
   * Usage: runMain graft.Explain [queryName] [sfDir]
@@ -10,19 +8,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args.headOption
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val targets = name match {
       case Some(n) => Seq(n -> SparkEntry.queries(n))
-      case None => SparkEntry.queries.toSeq.sortBy(_._1)
+      case None => SparkEntry.queryNames.map(n => n -> SparkEntry.queries(n))
     }
     targets.foreach { case (n, fn) =>
       println(s"\n========== $n ==========")

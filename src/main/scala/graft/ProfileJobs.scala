@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev scratch: per-JOB wall-clock breakdown of one registered query —
   * `runMain graft.ProfileJobs <query> [sfDir]`. Runs one warm pass,
@@ -14,14 +13,7 @@ object ProfileJobs {
     // queries in one JVM (one warm + one instrumented pass each)
     val names = args(0).split(',').toSeq
     val dir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm pass (JIT + codegen + any per-JVM fixture builds)
@@ -60,10 +52,21 @@ object ProfileJobs {
         prevEnd = math.max(prevEnd, j.end)
         println(f"  job ${j.id}%3d ${dur}%7.3f s  (gap before ${gap}%6.3f s)  ${j.stages}%2d stages  ${j.site}")
       }
-      val sumJobs = ordered.map(j => (j.end - j.start) / 1e3).sum
-      println(f"  sum of job durations ${sumJobs}%.3f s " +
-        f"(driver/plan gaps ${total - sumJobs}%.3f s)")
+      // listener event times are whole milliseconds, so the union can
+      // overshoot the nanoTime total by a rounding step — clamp that
+      val covered = coveredMillis(ordered.map(j => (j.start, j.end))) / 1e3
+      println(f"  jobs cover ${covered}%.3f s of wall " +
+        f"(driver/plan gaps ${math.max(0.0, total - covered)}%.3f s)")
     }
     spark.stop()
   }
+
+  /** Milliseconds covered by at least one (start, end) interval.
+    * Concurrent jobs overlap, so total wall minus the SUM of their
+    * durations can go negative; minus this union it cannot. */
+  private[graft] def coveredMillis(intervals: Seq[(Long, Long)]): Long =
+    intervals.filter { case (s, e) => e > s }.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((acc, reach), (s, e)) =>
+        if (e <= reach) (acc, reach) else (acc + e - math.max(s, reach), e)
+      }._1
 }

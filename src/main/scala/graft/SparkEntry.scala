@@ -4155,6 +4155,11 @@ object SparkEntry {
     "q196_hybrid_bm25" -> (q196 _)
   )
 
+  /** The registered query names in query-number order (q01, q02, …,
+    * q196) — the one list Bench times and Explain prints. */
+  def queryNames: Seq[String] =
+    queries.keys.toSeq.sortBy(n => (n.drop(1).takeWhile(_.isDigit).toInt, n))
+
   /** q89 oracle: the same 10 PageRank iterations unrolled as CTEs —
     * generated by a loop so the Spark loop and the SQL loop can't
     * drift in iteration count or arithmetic shape. */

@@ -51,23 +51,6 @@ object Ann {
     finishTopK(scored, "__cos", k)
   }
 
-  /** Assign every corpus row to its nearest centroid (argmax cosine,
-    * ties → lowest centroid id). The centroid set IS the IVF model — a
-    * deliberately small table — so it is materialised on the driver once
-    * (the same data movement as a broadcast join's build side) and the
-    * per-row argmax runs as a pure projection: zero exchanges, the
-    * corpus never moves.
-    *
-    * NOTE: calling this EAGERLY RUNS a Spark job (the centroid
-    * `collect()`) at DataFrame-construction time — acceptable because
-    * the model table is small by construction, but callers composing
-    * lazy pipelines should construct it once and reuse.
-    *
-    * Corpus rows with a null embedding are EXCLUDED from the index
-    * (filtered here, explicitly): a null vector has no bucket, and
-    * letting it fall through as a null centroid_id would silently drop
-    * it later in ivfTopK's bucket join. Filter nulls upstream if they
-    * should be scored some other way. */
   /** Train IVF centroids with distributed Lloyd's k-means (spherical:
     * assignment by cosine via the same zero-exchange `nearest_centroid`
     * projection queries use, means recomputed per dimension).
@@ -80,6 +63,10 @@ object Ann {
     * cluster layouts, never Math.random. Empty clusters keep their
     * previous centroid. Returns (centroid_id int, `vecCol`
     * array<float>) ready for `ivfTopK`/`assignBuckets`.
+    *
+    * NOTE: calling this EAGERLY RUNS the training (one seeding job,
+    * then one aggregate job per iteration) at DataFrame-construction
+    * time; the returned frame is a driver-local relation.
     */
   def trainCentroids(
       corpus: DataFrame, idCol: String, vecCol: String,
@@ -161,6 +148,23 @@ object Ann {
       .toDF("centroid_id", vecCol)
   }
 
+  /** Assign every corpus row to its nearest centroid (argmax cosine,
+    * ties → lowest centroid id). The centroid set IS the IVF model — a
+    * deliberately small table — so it is materialised on the driver once
+    * (the same data movement as a broadcast join's build side) and the
+    * per-row argmax runs as a pure projection: zero exchanges, the
+    * corpus never moves.
+    *
+    * NOTE: calling this EAGERLY RUNS a Spark job (the centroid
+    * `collect()`) at DataFrame-construction time — acceptable because
+    * the model table is small by construction, but callers composing
+    * lazy pipelines should construct it once and reuse.
+    *
+    * Corpus rows with a null embedding are EXCLUDED from the index
+    * (filtered here, explicitly): a null vector has no bucket, and
+    * letting it fall through as a null centroid_id would silently drop
+    * it later in ivfTopK's bucket join. Filter nulls upstream if they
+    * should be scored some other way. */
   def assignBuckets(
       corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
@@ -460,8 +464,9 @@ object Ann {
     * persisted as parquet) — the production shape: the corpus is
     * encoded once and every query batch pays only probe + ADC + rerank,
     * never re-encoding (measured 4.7 s e2e → 2.2 s per 50-query batch
-    * against a persisted 100k index, StressR8). `corpus` supplies raw
-    * vectors for the exact rerank and is untouched when `refine` = 0. */
+    * against a persisted 100k index; SURVEY §4, r8 stress). `corpus`
+    * supplies raw vectors for the exact rerank and is untouched when
+    * `refine` = 0. */
   def searchPqIndex(
       pqIndex: DataFrame, corpus: DataFrame, queries: DataFrame,
       centroids: DataFrame, codebooks: Seq[Seq[Seq[Float]]],

@@ -332,6 +332,14 @@ object Corpus {
     }
   }
 
+  /** Candidate-count bound for shipping [[heavyHitters]]' exact-count
+    * filter as an In/InSet plan literal; above it the (already
+    * collected) candidates travel as a broadcast LocalRelation
+    * instead — multi-word shingle strings are heavier per entry than
+    * the DriverBudget float model, so this sits well under
+    * [[DriverBudget.TrainRows]]. */
+  private val MaxInSetCandidates = 4096
+
   /** Sketch-first heavy hitters: the 100 TB path for [[ngramFreq]]'s
     * top-k. The exact plan's shuffle carries one row per distinct
     * n-gram per partition — fine while the vocabulary is bounded,
@@ -347,15 +355,13 @@ object Corpus {
     * `maxTracked` ≥ distinct n-grams (the sketch degenerates to exact)
     * and overwhelmingly likely otherwise with the default 4× headroom;
     * CorpusSpec pins equality on a Zipf corpus. Same column contract
-    * as ngramFreq (doc-distinct n-grams, freq-then-text ordering). */
-  /** Candidate-count bound for shipping [[heavyHitters]]' exact-count
-    * filter as an In/InSet plan literal; above it the (already
-    * collected) candidates travel as a broadcast LocalRelation
-    * instead — multi-word shingle strings are heavier per entry than
-    * the DriverBudget float model, so this sits well under
-    * [[DriverBudget.TrainRows]]. */
-  private val MaxInSetCandidates = 4096
-
+    * as ngramFreq (doc-distinct n-grams, freq-then-text ordering).
+    *
+    * NOTE: calling this EAGERLY RUNS a Spark job (the sketch pass's
+    * candidate `collect()`) at DataFrame-construction time; the exact
+    * count runs when the result is acted on, so the two passes read
+    * the source in separate jobs. Callers composing lazy pipelines
+    * should construct it once and reuse. */
   def heavyHitters(
       docs: DataFrame, textCol: String, n: Int, topK: Int,
       sketchK: Int = 0, maxTracked: Int = 100000): DataFrame = {

@@ -545,6 +545,11 @@ object Dedup {
     * Near-duplication is not transitive, so a batch doc whose only link
     * to the corpus runs THROUGH a dropped batch sibling survives — by
     * design: it cleared the similarity bar against everything retained.
+    *
+    * The returned delta index has a `localCheckpoint` of the batch
+    * features in its lineage, so it lives only as long as this
+    * session: `save` or `materialize` it within the session before
+    * relying on it in a later one.
     */
   def incrementalDedup(
       batch: DataFrame, index: MinhashIndex, idCol: String, textCol: String,
@@ -926,7 +931,7 @@ object Dedup {
     // most of the corpus and its pairs serialise through one task.
     // MEASURED at the registered q76 config (k=16, 100k 64-dim
     // vectors, 32 threads): salt=4 is only ~6% faster (7.65 -> 7.18 s
-    // interleaved A/B, StressR13, results verified identical) — at
+    // interleaved A/B, SURVEY §6 r13, results verified identical) — at
     // this scale training + components dominate, not the pair join —
     // so the default stays 1; reach for it when the cluster-size
     // histogram (Corpus.keyProfile on centroid_id) shows real skew.

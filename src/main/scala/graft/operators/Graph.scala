@@ -70,7 +70,7 @@ object Graph {
 
   /** Per-operator driver-path PERFORMANCE ceilings — the measured
     * driver-vs-distributed crossovers from the r16 sf1 replica
-    * experiment (StressR16 `sf1`, 24 GiB JVM, local[32], same inputs
+    * experiment (SURVEY §6 r16 item 5; 24 GiB JVM, 32 cores, same inputs
     * both paths, log-log interpolation between the 1.2M- and
     * 12M-edge points):
     *

@@ -34,10 +34,11 @@ object SetSimilarity {
     * merge-count kernel when GraftExtensions is installed (no boxed
     * hash set, no result-array allocation per pair; sorted inputs
     * skip the sort), `size(array_intersect)` otherwise. Values are
-    * identical (MinHashSpec pins the kernel to the builtin). */
-  private def interCount(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-        .exists(_.catalog.functionExists("inter_longs")))
+    * identical (MinHashSpec pins the kernel to the builtin). Looks the
+    * kernel up in `df`'s own session, not the thread's active one —
+    * a thread without an active session still gets the kernel. */
+  private def interCount(df: DataFrame, a: Column, b: Column): Column =
+    if (df.sparkSession.catalog.functionExists("inter_longs"))
       call_function("inter_longs", a, b)
     else size(array_intersect(a, b)).cast("long")
 
@@ -128,7 +129,7 @@ object SetSimilarity {
     val fa = sets.select(col("__id").as("a_id"), col("__ts").as("__ta"))
     val fb = sets.select(col("__id").as("b_id"), col("__ts").as("__tb"))
     cand.join(fa, "a_id").join(fb, "b_id")
-      .withColumn("inter", interCount(col("__ta"), col("__tb")))
+      .withColumn("inter", interCount(cand, col("__ta"), col("__tb")))
       .withColumn("uni",
         (size(col("__ta")) + size(col("__tb"))).cast("long") - col("inter"))
       .filter(col("inter") * tauDen >= lit(tauNum.toLong) * col("uni"))
@@ -201,7 +202,7 @@ object SetSimilarity {
     val fb = sets.select(col("__id").as("b_id"), col("__ts").as("__tb"),
       col("__n").as("n_b"))
     cand.join(fa, "a_id").join(fb, "b_id")
-      .withColumn("inter", interCount(col("__ta"), col("__tb")))
+      .withColumn("inter", interCount(cand, col("__ta"), col("__tb")))
       .filter(col("inter") * tauDen >= lit(tauNum.toLong) * col("n_a"))
       .select(col("a_id"), col("b_id"), col("inter"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"))
@@ -380,7 +381,7 @@ object SetSimilarity {
     cand.join(fa, "a_id")
       .join(maybeB(bsets.select(col("b_id"), col("__bts").as("__tb"))),
         "b_id")
-      .withColumn("inter", interCount(col("__ta"), col("__tb")))
+      .withColumn("inter", interCount(cand, col("__ta"), col("__tb")))
       .withColumn("uni",
         (col("__na") + size(col("__tb"))).cast("long") - col("inter"))
       .filter(col("inter") * tauDen >= lit(tauNum.toLong) * col("uni"))
@@ -489,7 +490,7 @@ object SetSimilarity {
     cand.join(fa, "a_id")
       .join(maybeB(bsets.select(col("b_id"), col("__bts").as("__tb"))),
         "b_id")
-      .withColumn("inter", interCount(col("__ta"), col("__tb")))
+      .withColumn("inter", interCount(cand, col("__ta"), col("__tb")))
       .withColumn("n_b", size(col("__tb")).cast("long"))
       .filter(col("inter") * tauDen >= lit(tauNum.toLong) * col("n_b"))
       .select(col("b_id"), col("a_id"), col("inter"), col("n_b"),

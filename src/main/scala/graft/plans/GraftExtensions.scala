@@ -10,9 +10,9 @@ import graft.functions._
   * session function registry, so SQL text and `call_function` both
   * resolve them (`SELECT jaro_winkler(a, b)`).
   *
-  * Activate with
+  * [[graft.GraftSession]] installs it through
   *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * or `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * (a builder's `withExtensions(new GraftExtensions)` works too).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

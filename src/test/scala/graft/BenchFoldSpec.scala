@@ -65,4 +65,16 @@ class BenchFoldSpec extends AnyFunSuite {
       500.0, canaryFlat = true, nFlags = 2),
       "gate flags veto even with prewarm disabled")
   }
+
+  test("queryNames: every registered query once, in query-number order") {
+    val names = SparkEntry.queryNames
+    assert(names.distinct === names)
+    assert(names.toSet === SparkEntry.queries.keySet)
+    val nums = names.map(_.drop(1).takeWhile(_.isDigit).toInt)
+    assert(nums === nums.sorted)
+    assert(names.head === "q01_name_parse")
+    // the canary and the control arm time registered queries
+    assert((Bench.ControlQueries :+ Bench.CanaryQuery)
+      .forall(SparkEntry.queries.contains))
+  }
 }

@@ -118,6 +118,80 @@ class DedupSpec extends SparkSpec {
     assert(nextSurvivors.isEmpty)
   }
 
+  test("incrementalDedup ≡ incrementalNearDup + dropNearDuplicates, both arrival orders") {
+    // q64's fused path against the older two-operator composition it
+    // replaced, on seeded random batches: corpus near-copies,
+    // within-batch near-copy chains, and cross-batch copies that make
+    // the survivors depend on which batch arrives first
+    def fused(batch: org.apache.spark.sql.DataFrame, index: Dedup.MinhashIndex) = {
+      val (surv, delta) = Dedup.incrementalDedup(batch, index, "doc_id",
+        "text", shingleN = 2, numHashes = 48, bands = 16, threshold = 0.5)
+      (surv, index.union(delta))
+    }
+    def composed(batch: org.apache.spark.sql.DataFrame, index: Dedup.MinhashIndex) = {
+      val hits = Dedup.incrementalNearDup(batch, index, "doc_id", "text",
+        shingleN = 2, numHashes = 48, bands = 16, threshold = 0.5)
+        .select(col("b_id").as("doc_id"))
+      val surv = Dedup.dropNearDuplicates(
+        batch.join(hits, Seq("doc_id"), "left_anti"), "doc_id", "text",
+        shingleN = 2, numHashes = 48, bands = 16, threshold = 0.5)
+      (surv, index.union(Dedup.buildMinhashIndex(surv, "doc_id", "text",
+        shingleN = 2, numHashes = 48, bands = 16)))
+    }
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().sorted.toSeq
+    var dropped = 0
+    var orderMatters = false
+    for (seed <- Seq(7, 31)) {
+      val rnd = new scala.util.Random(seed)
+      val vocab = (0 until 60).map(i => s"w$i")
+      def fresh() = Seq.fill(8 + rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
+      def nearCopy(d: Seq[String]) =
+        (1 to 1 + rnd.nextInt(2)).foldLeft(d)((t, _) =>
+          t.updated(rnd.nextInt(t.size), s"x${rnd.nextInt(1000)}"))
+      val corpusDocs = Seq.fill(8)(fresh())
+      def makeBatch(other: Seq[Seq[String]]) = {
+        val out = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+        (0 until 10).foreach { _ =>
+          out += (rnd.nextInt(5) match {
+            case 0 => nearCopy(corpusDocs(rnd.nextInt(corpusDocs.size)))
+            case 1 if out.nonEmpty => nearCopy(out(rnd.nextInt(out.size)))
+            case 2 if other.nonEmpty => nearCopy(other(rnd.nextInt(other.size)))
+            case _ => fresh()
+          })
+        }
+        out.toSeq
+      }
+      val aDocs = makeBatch(Nil)
+      val bDocs = makeBatch(aDocs)
+      def frame(base: Long, ds: Seq[Seq[String]]) =
+        ds.zipWithIndex.map { case (d, i) => (base + i, d.mkString(" ")) }
+          .toDF("doc_id", "text")
+      val a = frame(100L, aDocs)
+      val b = frame(200L, bDocs)
+      val index = Dedup.buildMinhashIndex(
+        corpusDocs.zipWithIndex.map { case (d, i) => (i.toLong, d.mkString(" ")) }
+          .toDF("doc_id", "text"),
+        "doc_id", "text", shingleN = 2, numHashes = 48, bands = 16)
+      val kept = Seq(Seq(a, b), Seq(b, a)).map { order =>
+        var fIdx = index
+        var cIdx = index
+        order.flatMap { batch =>
+          val (fSurv, fNext) = fused(batch, fIdx)
+          val (cSurv, cNext) = composed(batch, cIdx)
+          assert(ids(fSurv) === ids(cSurv), s"seed $seed")
+          dropped += 10 - ids(fSurv).size
+          fIdx = fNext
+          cIdx = cNext
+          ids(fSurv)
+        }.toSet
+      }
+      orderMatters ||= kept(0) != kept(1)
+    }
+    // the fixtures do exercise the drop paths and the arrival order
+    assert(dropped > 0 && orderMatters)
+  }
+
   test("exactIncremental anti-joins corpus hashes then keeps min id per content") {
     val corpusHashes = Dedup.exact(docs, "doc_id", "text")
       .select("content_hash")

@@ -218,4 +218,34 @@ class SetSimilaritySpec extends SparkSpec {
     }
     assert(loud != null)
   }
+
+  test("verify joins use inter_longs on a thread with no active session") {
+    // the kernel lookup must follow the input frame's session: a
+    // worker thread that never set (or cleared) its active session
+    // used to fall back to size(array_intersect) silently
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 20).map(i => s"t$i")
+    val df = (0L until 24L).map(i => (i, rnd.shuffle(vocab).take(4 + rnd.nextInt(6))))
+      .toDF("id", "toks")
+    val jBrute = bag(SetSimilarity.jaccardJoinBrute(df, "id", col("toks"), 1, 2))
+    val cBrute = cbag(SetSimilarity.containmentBrute(df, "id", col("toks"), 1, 2))
+    @volatile var outcome: scala.util.Try[Seq[(String, Any)]] = null
+    val worker = new Thread(() => {
+      outcome = scala.util.Try {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        assert(org.apache.spark.sql.SparkSession.getActiveSession.isEmpty)
+        val j = SetSimilarity.jaccardJoin(df, "id", col("toks"), 1, 2)
+        val c = SetSimilarity.containmentJoin(df, "id", col("toks"), 1, 2)
+        Seq(j.queryExecution.executedPlan.toString -> bag(j),
+          c.queryExecution.executedPlan.toString -> cbag(c))
+      }
+    })
+    worker.start()
+    worker.join()
+    val Seq((jPlan, jGot), (cPlan, cGot)) = outcome.get
+    assert(jPlan.contains("inter_longs"), jPlan)
+    assert(cPlan.contains("inter_longs"), cPlan)
+    assert(jGot === jBrute)
+    assert(cGot === cBrute)
+  }
 }
